@@ -317,9 +317,9 @@ class ScriptGen:
     def __init__(self, seed: int):
         self.rng = random.Random(seed)
 
-    def make(self, suffix: str, size=SCRIPT_SIZES[0]) -> Op:
+    def make(self, suffix: str, size: tuple) -> Op:
         rng = self.rng
-        lo, hi = size  # skewed towards the short end of the class
+        lo, hi = size  # skewed towards the short end of the band
         n_clauses = int(round(lo * (hi / lo) ** (rng.random() ** 2)))
         nodes: list = []  # i -> {"nom", "age"}
         edges: set = set()

@@ -65,7 +65,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def configure_env() -> dict:
     """Spark/Python environment, set before anything starts a JVM:
     workers import the package from this checkout, Spark uses every
-    core, the driver heap stays below host RAM, and scratch files land
+    core, the JVM heap stays below host RAM, and scratch files land
     under ``.perfbench/``."""
     cpus = len(os.sched_getaffinity(0))
     with open("/proc/meminfo") as fh:
