@@ -68,6 +68,9 @@ class Op:
     oracle_sql: str | None = None  # bulk programs
     expected: pd.DataFrame | None = None  # scripts
     expected_edges: set | None = None  # script delete: surviving (src, dst)
+    # the pass slot the op fills (template, plus the size band for
+    # scripts): latencies are aggregated per slot
+    slot: str = ""
 
 
 # ---------------------------------------------------------------------------
@@ -281,6 +284,7 @@ class BulkGen:
         extra = extra[0] if extra else {}
         return Op(
             template=name,
+            slot=name,
             kind=kind,
             program=program,
             params=extra.get("params"),
@@ -385,7 +389,12 @@ class ScriptGen:
     def pass_ops(self) -> list:
         slots = [(k, size) for k in SCRIPT_SUFFIXES for size in SCRIPT_SIZES]
         self.rng.shuffle(slots)
-        return [self.make(k, size) for k, size in slots]
+        ops = []
+        for k, size in slots:
+            op = self.make(k, size)
+            op.slot = f"{op.template}_{size[0]}-{size[1]}"
+            ops.append(op)
+        return ops
 
 
 def _node_frame(nodes) -> pd.DataFrame:

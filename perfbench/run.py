@@ -18,6 +18,13 @@ timed with ``count()``.  The data set is generated once per checkout
 (``perfbench/datagen.py``) under ``.perfbench/``; the seed drives the
 programs and the order within each pass.
 
+A run times whole passes, at least two, until ``--seconds`` have been
+timed.  ``op_geomean_s`` is the geometric mean over the pass slots of
+each slot's median latency, and ``ops_per_s`` the rate of one pass in
+which every slot takes its median latency; a slot is a template (for
+scripts, a suffix and size band) or a registry query, and every seed
+fills the same slots.
+
 The last stdout line is the result object (``correct``, ``attempted``,
 ``failed``, ``metrics``): end-to-end metrics with ``--trace 0``,
 per-layer metrics with ``--trace 1``.  The line before it carries the
@@ -57,6 +64,10 @@ MODULE_OF_FAMILY = {
 MODULES = ["graph_algos", "similarity", "dedup", "multimodal", "text", "streaming"]
 WORKLOADS = ["gql", "operators"]
 SETUP_STARTS = 3  # session starts per run; setup_s takes their median
+# timed passes per run, at least: every slot is timed twice (a traced run
+# times one traced and one untraced pass), and a run on a slow host does
+# not measure fewer passes than one on a fast host
+MIN_PASSES = 2
 FIRST_SCAN = "match (r: Region) return r"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -79,13 +90,18 @@ def configure_env() -> dict:
         p for p in (str(ROOT), os.environ.get("PYTHONPATH", "")) if p
     )
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{max(1, min(4, mem_gb // 3))}g"
+    heap = f"{max(1, min(4, mem_gb // 3))}g"
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = heap
+    # the driver heap starts at its full size: a heap that grows under
+    # load makes the first minute of every run slower than the rest
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-java-options -Xms{heap} pyspark-shell"
     os.environ["SPARK_LOCAL_DIRS"] = str(local)
     os.environ["TMPDIR"] = str(tmp)
     # no hsperfdata file: the JVM would write it to the system /tmp
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     return {k: os.environ[k] for k in
-            ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_LOCAL_DIRS")}
+            ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_LOCAL_DIRS",
+             "PYSPARK_SUBMIT_ARGS")}
 
 
 def pct(values, q):
@@ -106,6 +122,16 @@ def geomean(values, default=0.0):
     """Geometric mean: every operation weighs the same whatever its
     size, and multiplicative run-to-run noise averages out."""
     return statistics.geometric_mean(values) if values else default
+
+
+def slot_medians(lat) -> dict:
+    """Median latency of each pass slot over the run's timed passes.
+    Every pass fills every slot once, so the set of slots is the same
+    for every seed; a slot's median shrugs off a single slow call."""
+    by_slot: dict = {}
+    for slot, _, d in lat:
+        by_slot.setdefault(slot, []).append(d)
+    return {k: med(v) for k, v in by_slot.items()}
 
 
 class Bench:
@@ -330,6 +356,7 @@ class Bench:
         """Run one timed operation; returns its wall (also on failure)."""
         is_gql = self.workload == "gql"
         name = op.template if is_gql else op
+        slot = op.slot if is_gql else op
         kind = op.kind if is_gql else "read"
         self.cache_records.append(self.cache_state(op if is_gql else None))
         self.attempted += 1
@@ -361,7 +388,7 @@ class Bench:
                 b_s, a_s, _ = self.run_query(name)
                 dt = b_s + a_s
             if not traced:
-                self.lat.append((name, kind, dt))
+                self.lat.append((slot, kind, dt))
             if is_gql:
                 verdict = self.check_gql(op, outputs)
                 if verdict != "OK":
@@ -468,7 +495,12 @@ class Bench:
 
     def run(self):
         setup_s = self.setup()
+        # what setup left on the Python heap stays alive: the per-op
+        # collections then only walk what the timed operations allocate
+        gc.collect()
+        gc.freeze()
         probe_before = self.probe_jvm_epoch()
+        steal0 = cpu_steal_s()
         if self.traced:
             self.tracer = self.tracing.Tracer(self.spark)
         timed = 0.0
@@ -483,11 +515,13 @@ class Bench:
                 if traced:
                     self.tracer.uninstall()
             pass_no += 1
-            if timed >= self.seconds and (not self.traced or pass_no >= 2):
+            if timed >= self.seconds and pass_no >= MIN_PASSES:
                 break
+        steal_s = cpu_steal_s() - steal0
         probe_after = self.probe_jvm_epoch()
         rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024 + self.jvm_rss_mb()
         n_ops = len(self.lat)
+        slots = slot_medians(self.lat)
         all_lat = [d for _, _, d in self.lat]
         reads = [d for _, k, d in self.lat if k == "read"]
         writes = [d for _, k, d in self.lat if k == "write"]
@@ -496,6 +530,8 @@ class Bench:
         detail = {
             "workload": self.workload, "seed": self.seed, "trace": int(self.traced),
             "env": self.env, "data_dir_rows": table_rows(self.data),
+            "jvm_args": list(self.spark._jvm.java.lang.management.ManagementFactory
+                             .getRuntimeMXBean().getInputArguments()),
             "setup": self.setup_detail,
             "ops_timed": n_ops, "passes": len(self.passes),
             "pass_p50_s": med(untraced_walls),
@@ -510,17 +546,20 @@ class Bench:
             "errors": self.errors[:20],
             "jvm_probe_s": {"before": probe_before, "after": probe_after},
             "degraded_epoch": max(probe_before, probe_after) > 0.5,
+            "cpu_steal_s_timed": steal_s,
             "cache_held_before_call": {
                 k: sum(1 for r in self.cache_records if r.get(k))
                 for k in ("load", "dup_clusters", "pair", "feed")
             } | {"calls": len(self.cache_records)},
+            "slot_p50_s": {k: round(v, 4) for k, v in sorted(slots.items())},
             "op_walls": [(n, round(d, 4)) for n, _, d in self.lat],
         }
         if not self.traced:
             metrics = {
                 "setup_s": (setup_s, "s"),
-                "op_geomean_s": (geomean(all_lat), "s"),
-                "ops_per_s": (n_ops / sum(untraced_walls), "1/s"),
+                "op_geomean_s": (geomean(list(slots.values())), "s"),
+                # one pass, every slot at its median latency
+                "ops_per_s": (len(slots) / sum(slots.values()), "1/s"),
             }
         else:
             metrics = self.layer_metrics(probe_before, probe_after, rss)
@@ -614,6 +653,17 @@ class Bench:
         m["host.jvm_probe_ms"] = (max(probe_before, probe_after) * 1000, "ms")
         m["session.peak_rss_mb"] = (rss, "MB")
         return m
+
+
+def cpu_steal_s() -> float:
+    """CPU seconds (all CPUs) the hypervisor has given to other guests
+    since boot, from ``/proc/stat``; 0 where the field is missing."""
+    try:
+        with open("/proc/stat") as fh:
+            fields = fh.readline().split()
+        return int(fields[8]) / os.sysconf("SC_CLK_TCK")
+    except (OSError, IndexError, ValueError):
+        return 0.0
 
 
 def table_rows(data_dir) -> dict:
