@@ -78,46 +78,6 @@ STREAMING_QUERIES = frozenset({
 # had zero driver-side verification because the first 50 were all g/x).
 _FAMILY_ORDER = "gxtdsmea"
 
-# Queries whose r1 driver run ERRORED and were fixed in r2 but have never
-# been re-confirmed by a driver window since (round-4 verdict) — pinned to
-# the very front of the registry until a green CORRECTNESS file shows them.
-_RECONFIRM_FIRST = [
-    "a3_pagerank", "d3_minhash_lsh",
-    "e1_event_window", "e2_sessionize", "e3_stream_dedup", "e4_stream_join",
-]
-
-# New queries a verdict explicitly wants confirmed in the NEXT window,
-# ahead of the interleaved fresh order (g29 is the 29th g-entry, so the
-# round-robin would otherwise bury it ~200 deep).  Like the reconfirm
-# pin, membership is only effective until a window records the query
-# green.
-_PIN_FIRST = [
-    # r7 pins (green in the r7 window — retired automatically) kept for
-    # provenance; r8 pins: the round-7 verdict's explicit asks (s22, the
-    # two newest language features) plus this round's new calibration
-    # oracle.  All 49 never-checked names (the r7 backlog of 40 + this
-    # round's s25/x96/t41/e33/d26/d27/d28/s26/e34) fit the 50-slot
-    # window, so r8 drains the entire backlog — which is also why the
-    # query count is frozen at 290 for the round.
-    "g29_mixed_varlength", "s23_dup_strategy_report", "s24_imi_cosine_dups",
-    "s22_ivf_cosine_dups", "g27_sql_surface", "g28_bind_params",
-    "s25_ivf_recall_calibration",
-]
-
-# Queries whose SEMANTICS or oracle changed this round while their latest
-# driver record is still green from an older round (the _PIN_FIRST filter
-# skips green names, so a changed-but-green query would otherwise sit in
-# the stale tail for rounds).  Listed names re-front EVERY round while
-# present; refresh the list each round to the actually-changed set
-# (round-9 verdict item 7: rotate the window toward changed code).
-_RECHECK_CHANGED = [
-    # round 15: the image ingest tier (persisted dHash band index +
-    # per-shard join + streaming twin + gauge ledger) is new, and m17
-    # grew the hamming_recovered row judged under the persisted layout
-    "m18_incremental_dhash_ingest", "m19_dhash_gauge_ledger",
-    "e39_image_ingest_stream", "m17_maintenance_decision_table",
-]
-
 
 def _interleave_by_family(base: dict) -> dict:
     fams: dict[str, list[str]] = {}
@@ -139,82 +99,60 @@ def _interleave_by_family(base: dict) -> dict:
     return out
 
 
-def _driver_checked_names() -> tuple:
-    """(seen, green): names that appeared in any committed
-    CORRECTNESS_r*.json window, and the subset whose MOST RECENT record
-    passed the oracle compare.  Latest-record-wins (the sorted glob gives
-    round order) so a query that was green in an old window but
-    hash-regressed in a newer one is re-fronted for reconfirmation
-    instead of sitting in the stale tail forever."""
+def _driver_records() -> dict:
+    """name -> (window index, record) of the query's MOST RECENT record in
+    the committed CORRECTNESS_r*.json windows (the sorted glob gives
+    round order, so a later window overrides an earlier one)."""
     import glob
     import json
     import os
 
-    seen: set = set()
-    latest: dict = {}  # name -> most recent record
+    latest: dict = {}
     here = os.path.dirname(os.path.abspath(__file__))
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+    for i, path in enumerate(sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json")))):
         try:
             with open(path) as fh:
                 data = json.load(fh)
         except Exception:
             continue  # a corrupt artifact must not break queries()
-        if not isinstance(data, dict):
-            continue
-        seen.update(data.keys())
-        latest.update(data)
-    green = {
-        k
-        for k, v in latest.items()
-        # the gate's pass bar is rows+schema+HASH: a record with
-        # hash_match=false is red (the r3/r4 dtype failures were
-        # exactly rows/schema-green, hash-red)
-        if isinstance(v, dict) and not v.get("err") and v.get("hash_match") is True
-    }
-    return seen, green
+        if isinstance(data, dict):
+            latest.update((k, (i, v)) for k, v in data.items())
+    return latest
+
+
+def _is_green(record) -> bool:
+    # the gate's pass bar is rows+schema+HASH: a record with
+    # hash_match=false is red (the r3/r4 dtype failures were exactly
+    # rows/schema-green, hash-red)
+    return isinstance(record, dict) and not record.get("err") and record.get("hash_match") is True
+
+
+def _driver_checked_names() -> tuple:
+    """(seen, green): names that appeared in any committed window, and the
+    subset whose most recent record passed the oracle compare (a query
+    green in an old window but red in a newer one is not green)."""
+    latest = _driver_records()
+    return set(latest), {k for k, (_, rec) in latest.items() if _is_green(rec)}
 
 
 def _rotate_window(interleaved: dict) -> dict:
     """Self-rotating driver window: the correctness gate samples a fixed
-    PREFIX of queries(), so order never-driver-checked queries first.
+    PREFIX of queries(), so order it as
+    1. checked but never green (latest record red or errored),
+    2. never checked,
+    3. least-recently checked first.
+    The sort is stable, so each partition keeps the family-interleaved
+    order and any prefix still spans every family; each committed
+    CORRECTNESS_r*.json advances the window by itself."""
+    latest = _driver_records()
 
-    Each round the driver commits a new CORRECTNESS_r*.json; re-reading
-    the accumulated key sets here advances the window automatically —
-    round N's prefix is made of queries absent from rounds 1..N-1
-    (round-4 verdict: r3 and r4 re-checked the identical 50 names while
-    176/277 queries had never met the oracle gate).  ``_RECONFIRM_FIRST``
-    (fixed-after-error, never re-run) jumps the queue entirely.  Both
-    partitions keep the family-interleaved relative order so any prefix
-    still spans every family.
-    """
-    checked, green = _driver_checked_names()
-    # FRONT: every query a window has seen but never passed — fixed
-    # oracles (the r3/r4 hash-red t20/t21/t23/a13) and fixed-after-error
-    # queries alike jump the queue until a window confirms them, then
-    # retire to the stale tail (a permanent pin would waste prefix
-    # slots every later round).  _RECONFIRM_FIRST names order first
-    # within the front for continuity with the round-4 verdict list.
-    needs_reconfirm = [n for n in interleaved if n in checked and n not in green]
-    front = [n for n in _RECONFIRM_FIRST if n in needs_reconfirm] + [
-        n for n in needs_reconfirm if n not in _RECONFIRM_FIRST
-    ]
-    pinned = [
-        n for n in _PIN_FIRST
-        if n in interleaved and n not in green and n not in front
-    ]
-    recheck = [
-        n for n in _RECHECK_CHANGED
-        if n in interleaved and n not in front and n not in pinned
-    ]
-    head = front + pinned + recheck
-    fresh = [n for n in interleaved if n not in checked and n not in head]
-    # Round-7 drain: 68 of the 87 never-checked queries are x-forms and the
-    # family round-robin fronts at most ~31 per 50-slot window; exhaust the
-    # x backlog first (in-family order kept) so it drains in two rounds,
-    # then fall back to the interleaved order for the remainder.
-    fresh = [n for n in fresh if n[0] == "x"] + [n for n in fresh if n[0] != "x"]
-    stale = [n for n in interleaved if n in green]
-    return {n: interleaved[n] for n in head + fresh + stale}
+    def rank(name):
+        if name not in latest:
+            return (1, 0)
+        i, rec = latest[name]
+        return (2, i) if _is_green(rec) else (0, 0)
+
+    return {n: interleaved[n] for n in sorted(interleaved, key=rank)}
 
 
 def _graph_query(spark: SparkSession, sf_dir: str, program: str):

@@ -361,63 +361,55 @@ class Executor:
 
         Unbounded closure uses path doubling — P_{k+1} = P_k ∪ (P_k ⋈
         P_k) — so diameter d costs ⌈log2 d⌉ join+distinct rounds instead
-        of d frontier expansions.  The bounded form walks hop counts
-        explicitly (hi is small by construction) and unions hops
-        lo..hi.  Every round shuffles on the join key and cuts lineage
-        with a rotated localCheckpoint (superseded blocks freed eagerly).
+        of d frontier expansions; the pair count is the fixpoint witness.
+        The bounded form walks hop counts explicitly (hi is small by
+        construction) and unions hops lo..hi.  Both run on the
+        graph_algos superstep driver: every round shuffles on the join
+        key and cuts lineage with a rotated checkpoint.
         """
-        from ..functions.graph_algos import _ckpt_rotate, _materialize, _shrink
+        from ..functions.graph_algos import Supersteps, edge_view
 
-        e = self.state.edges.filter(F.col("rel") == rel).select("src", "dst")
-        if undirected:
-            e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        pairs, prev_n, small = _materialize(e)
-        handle = None
-        if hi is not None:
+        e = edge_view(self.state.edges.filter(F.col("rel") == rel), directed=not undirected)
+        with Supersteps() as ss:
+            pairs, n = ss.barrier(e)
+            if hi is None:
+
+                def double(pairs, _):
+                    ext = (
+                        pairs.alias("a")
+                        .join(pairs.alias("b"), F.col("a.dst") == F.col("b.src"))
+                        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+                    )
+                    return pairs.unionByName(ext).dropDuplicates()
+
+                # 2^16-hop cap: a backstop, not a tuning knob
+                until = [F.count(F.lit(1))]
+                return ss.result(ss.loop(pairs, double, 16, until=until, start=(n,)))
+
             # bounded: ONE accumulated frame of (src, dst, _k) distinct
             # triples — _k the exact hop count — extended by joining the
-            # previous round's _k-slice with e, and re-checkpointed WITH
-            # the union folded inside each round (the unbounded branch's
-            # proven shape).  Unioning separately-checkpointed hop
-            # frames instead trips Catalyst's Union constraint rewrite
-            # ("key not found: src#N"): a localCheckpoint's LogicalRDD
-            # preserves constraints from the plan it snapshotted, which
-            # can reference attr ids that are not in the union child's
-            # output (caught by the round-7 variable-length fuzzer).
-            acc = pairs.withColumn("_k", F.lit(1))
-            handle = None
-            for k in range(2, hi + 1):
+            # previous round's _k-slice with e, the union folded inside
+            # each round.  Unioning separately-checkpointed hop frames
+            # instead trips Catalyst's Union constraint rewrite ("key not
+            # found: src#N"): a localCheckpoint's LogicalRDD preserves
+            # constraints from the plan it snapshotted, which can
+            # reference attr ids that are not in the union child's output
+            # (caught by the round-7 variable-length fuzzer).
+            def hop(acc, i):
                 nxt = (
-                    acc.filter(F.col("_k") == k - 1).alias("a")
+                    acc.filter(F.col("_k") == i).alias("a")
                     .join(e.alias("b"), F.col("a.dst") == F.col("b.src"))
                     .select(
                         F.col("a.src").alias("src"),
                         F.col("b.dst").alias("dst"),
-                        F.lit(k).alias("_k"),
+                        F.lit(i + 1).alias("_k"),
                     )
                     .dropDuplicates()
                 )
-                acc, handle = _ckpt_rotate(
-                    _shrink(acc.unionByName(nxt), small), handle
-                )
-            return (
-                acc.filter(F.col("_k") >= lo)
-                .select("src", "dst")
-                .dropDuplicates()
-            )
-        for _ in range(16):  # 2^16-hop cap: a backstop, not a tuning knob
-            ext = (
-                pairs.alias("a")
-                .join(pairs.alias("b"), F.col("a.dst") == F.col("b.src"))
-                .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-            )
-            grown = pairs.unionByName(ext).dropDuplicates()
-            pairs, handle = _ckpt_rotate(_shrink(grown, small), handle)
-            n = pairs.count()
-            if n == prev_n:
-                break
-            prev_n = n
-        return pairs
+                return acc.unionByName(nxt)
+
+            acc = ss.loop(pairs.withColumn("_k", F.lit(1)), hop, hi - 1)
+            return ss.result(acc.filter(F.col("_k") >= lo).select("src", "dst").dropDuplicates())
 
     def _match_rel(
         self,

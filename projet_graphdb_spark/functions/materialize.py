@@ -14,6 +14,14 @@ touching call sites (round-15 verdict item 7).  Unset (the default, and
 the bench configuration) the behavior is byte-for-byte the historical
 ``localCheckpoint`` path, so driver bench comparisons stay valid.
 
+Sink-backed mode needs ONE POSIX path that the driver and every
+executor see (a local directory on one host, or a shared mount such as
+NFS): the driver creates and deletes sink directories with ``os`` /
+``shutil`` while executors write and read the parquet.  A remote URI
+(``hdfs://``, ``s3://``, any scheme but ``file:``) is rejected with
+``ValueError`` — the driver could neither create nor delete it, so every
+sink would leak.
+
 Rotation predecessors are freed through :func:`release`: RDD handles
 are unpersisted, sink paths are deleted.  Every sink path is unique per
 call (uuid4), so nothing is ever shared across runs — this is
@@ -25,6 +33,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 
@@ -45,6 +54,14 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     d = ckpt_dir()
     if d is None:
         return df.localCheckpoint(eager=eager)
+    url = urlparse(d)
+    if url.scheme not in ("", "file"):
+        raise ValueError(
+            f"SPARK_GRAFT_CKPT_DIR={d!r}: sink-backed mode needs a POSIX "
+            "path shared by the driver and every executor, not a "
+            f"{url.scheme}:// URI"
+        )
+    d = os.path.abspath(url.path if url.scheme else d)
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"mat_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
@@ -61,8 +78,13 @@ def handle_of(df: DataFrame):
 
 
 def release(handle) -> None:
-    """Free a rotation predecessor: delete its sink directory (string
-    handles) — RDD handles are the caller's to unpersist.  Best-effort:
-    cleanup must never fail the algorithm."""
+    """Free a materialized frame: delete its sink directory (string
+    handles) or unpersist its JVM RDD.  Best-effort: cleanup must never
+    fail the algorithm."""
     if isinstance(handle, str):
         shutil.rmtree(handle, ignore_errors=True)
+    elif handle is not None:
+        try:
+            handle.unpersist(False)
+        except Exception:
+            pass

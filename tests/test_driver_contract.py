@@ -79,6 +79,24 @@ def test_rotation_green_is_latest_record_wins(monkeypatch, tmp_path):
     )
 
 
+def test_rotation_least_recently_checked_first(monkeypatch, tmp_path):
+    """Among green queries the window fronts the one checked longest ago:
+    a name last checked in r01 precedes one last checked in r16, whatever
+    their registry order; never-green and never-checked names lead."""
+    rec_ok = {"rows_match": True, "schema_match": True, "hash_match": True,
+              "err": None}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"q_old": rec_ok, "q_recent": rec_ok, "q_red": rec_ok})
+    )
+    (tmp_path / "CORRECTNESS_r16.json").write_text(
+        json.dumps({"q_recent": rec_ok, "q_red": dict(rec_ok, hash_match=False)})
+    )
+    monkeypatch.setattr(E, "__file__", str(tmp_path / "__spark_entry__.py"))
+    names = ["q_recent", "q_old", "q_fresh", "q_red"]
+    order = list(E._rotate_window({n: None for n in names}))
+    assert order == ["q_red", "q_fresh", "q_old", "q_recent"]
+
+
 def test_compare_flags_kind_divergence_only():
     """check_oracle's dtype guard: int32-vs-int64 passes (the driver's
     hash survives width), int64-vs-float64 fails (the HUGEINT class)."""

@@ -247,8 +247,9 @@ def test_join_hint_forces_shuffled_hash(spark):
 
 
 # Iterative algorithms: the final plan is just the last checkpoint's scan,
-# so the per-SUPERSTEP plans (captured via graph_algos.PLAN_PROBE at the
-# checkpoint funnel) carry the audit.  A nested-loop join inside a
+# so the per-SUPERSTEP plans (captured via graph_algos.PLAN_PROBE by the
+# Supersteps driver, the one checkpoint funnel) carry the audit — every
+# registry query whose loop runs on the driver is listed.  A nested-loop join inside a
 # superstep is tolerated only if its measured build side is tiny (the
 # pagerank dangling-mass 1-row broadcast), never by trust.
 ITERATIVE = [
@@ -256,8 +257,23 @@ ITERATIVE = [
     "a2_connected_components",
     "a3_pagerank",
     "a4_sssp",
+    "a7_label_propagation",
     "a8_kcore",
+    "a11_personalized_pagerank",
+    "a12_feature_propagation",
     "a13_modularity",
+    "a14_hits",
+    "a16_landmark_closeness",
+    "a17_random_walks",
+    "a18_maximal_independent_set",
+    "a19_diameter_estimate",
+    "a20_topo_layers",
+    "a21_maximal_matching",
+    "a22_hub_removal_robustness",
+    "a23_ktruss",
+    "a24_bipartiteness",
+    "g11_transitive",
+    "g29_mixed_varlength",
 ]
 
 

@@ -106,6 +106,22 @@ def test_materialize_sink_backed_roundtrip(spark, tmp_path, monkeypatch):
     assert not os.path.exists(h)
 
 
+@pytest.mark.parametrize("uri", ["hdfs://namenode/ckpt", "s3://bucket/ckpt"])
+def test_materialize_rejects_remote_sink_uri(spark, tmp_path, monkeypatch, uri):
+    """Sink-backed mode needs a POSIX path the driver can create and
+    delete: a remote URI raises ValueError up front instead of making a
+    junk local directory and leaking every remote sink."""
+    import os
+
+    from projet_graphdb_spark.functions import materialize as M
+
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_DIR", uri)
+    with pytest.raises(ValueError, match="POSIX"):
+        M.materialize(spark.range(3))
+    assert os.listdir(tmp_path) == []
+
+
 def test_materialize_default_is_local_checkpoint(spark, monkeypatch):
     from projet_graphdb_spark.functions import materialize as M
 
